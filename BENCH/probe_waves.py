@@ -3,7 +3,7 @@
 per-wave stage timings (run_wave's timings dict) so the thread-scaling of
 each fixed-cost stage is visible.
 
-Usage: python BENCH/probe_waves.py CPUS [seen_broadcast_below]
+Usage: python BENCH/probe_waves.py CPUS
 Env:   BENCH_CRAWL_COMPANIES / BENCH_FILLER_KB as in bench.py
 """
 import json
@@ -20,7 +20,6 @@ from new_ent_crawler_spark.plans.wave import WaveEngine  # noqa: E402
 import bench  # noqa: E402
 
 cpus = int(sys.argv[1])
-seen_bb = int(sys.argv[2]) if len(sys.argv) > 2 else 4_000_000
 web_dir = bench._bench_web(int(os.environ.get("BENCH_CRAWL_COMPANIES", "19200")))
 spark = get_spark(app=f"probe-{cpus}", cpus=cpus,
                   shuffle_partitions=max(2 * cpus, 8),
@@ -39,7 +38,7 @@ eng = WaveEngine(spark, web_dir, work,
                  per_host_k=int(os.environ.get("BENCH_PER_HOST_K", "9600")),
                  max_waves=40,
                  cache_pages=False, expected_total_urls=2_000_000,
-                 salt_buckets=16, seen_broadcast_below=seen_bb)
+                 salt_buckets=16)
 ticks0 = bench._cpu_ticks()
 t0 = time.perf_counter()
 stats = eng.run(resume=False)
@@ -49,8 +48,7 @@ totals = {}
 for s in stats:
     for k, v in s.get("timings", {}).items():
         totals[k] = round(totals.get(k, 0) + v, 2)
-out = {"cpus": cpus, "seen_broadcast_below": seen_bb,
-       "total_s": round(el, 2), "stage_totals": totals,
+out = {"cpus": cpus, "total_s": round(el, 2), "stage_totals": totals,
        "n_parsed": eng.extracted().count(),
        "waves": [{k: s[k] for k in ("wave", "claimed", "new", "timings")
                   if k in s} for s in stats]}

@@ -35,7 +35,7 @@ add("Frontier dequeue: salted two-phase per-host top-K",
                     "0 page_type_score", "cast(0 as long) enqueue_wave",
                     "'' keyword", "'' company", "cast(0 as long) seed_id"),
         spark.createDataFrame([(str(h), 5) for h in range(37)], "host string, grant int"),
-        salt_buckets=8, max_attempts=3),
+        salt_buckets=8),
     "Phase 1 ranks within (host, salt) buckets so one hot registry domain "
     "spreads over salt_buckets tasks; phase 2 ranks the surviving "
     "K x salt_buckets rows per host. Two window exchanges over frontier "

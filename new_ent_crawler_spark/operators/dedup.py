@@ -25,6 +25,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Seen-set size below which the exact anti-join broadcasts the seen side and
+# the Bloom pre-filter is skipped (see filter_new_urls): ~a few hundred MB of
+# url strings at the cap.
+SEEN_BROADCAST_BELOW = 4_000_000
+
 
 class BloomFilter:
     """Bitarray Bloom over md5-derived hash pairs (Kirsch-Mitzenmacher
@@ -322,7 +327,7 @@ def build_bloom(urls: DataFrame, expected: int | None = None,
 def filter_new_urls(candidates: DataFrame, seen_urls: DataFrame,
                     bloom: BloomFilter | None,
                     seen_count: int | None = None,
-                    broadcast_below: int = 4_000_000) -> DataFrame:
+                    broadcast_below: int = SEEN_BROADCAST_BELOW) -> DataFrame:
     """Candidates not yet in the seen set.
 
     ``candidates`` and ``seen_urls`` must both expose a ``url`` column.  With

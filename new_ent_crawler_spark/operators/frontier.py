@@ -28,6 +28,8 @@ STATUS_IN_FLIGHT = 2
 STATUS_FOUND = 3
 STATUS_NOT_FOUND = 4
 STATUS_EXACT = 5
+# retry cap: a row stays claimable while crawler_count < MAX_ATTEMPTS
+MAX_ATTEMPTS = 3
 
 FRONTIER_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -114,19 +116,19 @@ def _order_cols():
             F.col("url").asc()]
 
 
-def eligibility_predicate(max_attempts: int = 3):
+def eligibility_predicate():
     """The single definition of "this row can still be claimed".  Used by
     both ``dequeue`` and the wave engine's fused pending head-count — a
     second hand-written copy once drifted (it dropped the host null check,
     so null-host rows kept pending>0 forever while claimed stayed 0 and the
     run spun refill-only waves until max_waves)."""
     return ((F.col("status") < STATUS_IN_FLIGHT)
-            & (F.col("crawler_count") < max_attempts)
+            & (F.col("crawler_count") < MAX_ATTEMPTS)
             & F.col("host").isNotNull())
 
 
 def dequeue(frontier: DataFrame, budgets: DataFrame,
-            salt_buckets: int = 8, max_attempts: int = 3) -> DataFrame:
+            salt_buckets: int = 8) -> DataFrame:
     """Claim this wave's work-list: per-host top-K_host by the priority
     total order, where K_host comes from the politeness token bucket.
 
@@ -135,7 +137,7 @@ def dequeue(frontier: DataFrame, budgets: DataFrame,
     ``budgets``: (host, grant int) — small, broadcast.
     """
     eligible = (frontier
-                .filter(eligibility_predicate(max_attempts))
+                .filter(eligibility_predicate())
                 .join(F.broadcast(budgets), "host", "inner")
                 .filter(F.col("grant") > 0))
     salted = with_url_key(eligible, salt_buckets)

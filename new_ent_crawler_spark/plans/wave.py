@@ -19,9 +19,12 @@ Scale notes (the design criteria this engine is judged on):
 * Dequeue is the only frontier-wide shuffle and it is salted two-phase
   top-K (operators/frontier.py) — registry-domain skew spreads over
   ``salt_buckets`` tasks.
-* The seen-set check anti-joins only the Bloom-positive slice
-  (operators/dedup.py); the Bloom itself is built once via treeAggregate and
-  merged incrementally with each wave's appended URLs — never rebuilt.
+* The seen-set check is an exact anti-join against the frontier urls,
+  broadcast while the frontier is under ``DD.SEEN_BROADCAST_BELOW``.  From
+  the first wave whose frontier reaches that gate, a Bloom built via
+  treeAggregate routes the candidates (operators/dedup.py) so only its
+  positive slice pays the shuffled anti-join; each later wave merges a
+  Bloom of its new URLs into it.  Below the gate no Bloom exists.
 * Every wave ends in an atomic snapshot commit of the frontier (the last
   write); crash mid-wave resumes from the previous frontier snapshot and
   rolls the append-only tables back to it (idempotent replay).
@@ -64,23 +67,17 @@ LINEAGE_PA, BUDGETS_PA = _control_schemas()
 class WaveEngine:
     def __init__(self, spark: SparkSession, data_dir: str, work_dir: str,
                  per_host_k: int = 4, max_waves: int = 64,
-                 salt_buckets: int = 8, max_attempts: int = 3,
+                 salt_buckets: int = 8,
                  expected_total_urls: int = 1_000_000,
-                 bloom_fpp: float = 0.01, use_bloom: bool = True,
-                 cache_pages: bool = True, compact_every: int = 8,
-                 seen_broadcast_below: int = 4_000_000,
-                 seen_filter: str = "bloom",
-                 verify_unique_urls: bool = False):
+                 cache_pages: bool = True, compact_every: int = 8):
         self.spark = spark
         self.data_dir = data_dir
         self.work_dir = work_dir
         self.per_host_k = per_host_k
         self.max_waves = max_waves
         self.salt_buckets = salt_buckets
-        self.max_attempts = max_attempts
+        # sizes the seen-set Bloom (built only above the broadcast gate)
         self.expected_total_urls = expected_total_urls
-        self.bloom_fpp = bloom_fpp
-        self.use_bloom = use_bloom
         # caching the (url, html) projection avoids a parquet scan per wave;
         # at 100 TB you would NOT cache — an Iceberg pages table bucketed by
         # url lets the per-wave broadcast probe prune to claimed buckets
@@ -95,24 +92,13 @@ class WaveEngine:
         # homogeneous files whose min/max footer stats the eligibility
         # scan prunes on (see append_delta below).
         self.compact_every = compact_every
-        # seen-side broadcast gate for the exact anti-join (see
-        # DD.filter_new_urls); probes compare broadcast vs shuffle here
-        self.seen_broadcast_below = seen_broadcast_below
-        # "bloom" (default) or "cuckoo" — the north_star names both; the
-        # cuckoo variant supports deletion (retiring frontier rows) at the
-        # cost of Python-per-item inserts (operators/dedup.py::CuckooFilter)
-        self.seen_filter = seen_filter
-        # opt-in load-time check of the pages unique-url invariant (see
-        # pages() docstring); off by default — at 10^10 rows it is a real
-        # (if column-pruned) aggregate job, and deduped-at-ingest is the
-        # documented contract
-        self.verify_unique_urls = verify_unique_urls
 
         self.frontier_t = DeltaTable(os.path.join(work_dir, "frontier"),
                                      key_col="url")
         self.budgets_t = SnapshotTable(os.path.join(work_dir, "budgets"))
         self.extracted_t = SnapshotTable(os.path.join(work_dir, "extracted"))
         self.lineage_t = SnapshotTable(os.path.join(work_dir, "lineage"))
+        # seen-set Bloom: None until the frontier reaches the broadcast gate
         self._bloom: DD.BloomFilter | None = None
         # sampled mean page size (set by run()'s batch tuning; sizes the
         # pruned-scan coalesce)
@@ -120,13 +106,6 @@ class WaveEngine:
         # pages-scan split count, planned once on the first wave (a session
         # constant: splits are sized before the pruning filter)
         self._scan_parts: int | None = None
-        # observed new-URLs-per-claim ratio from the previous wave; gates the
-        # fused md5 collect on an ESTIMATE of collected digest volume (the
-        # digests are O(n_new) = claims x out-link fan-out, so gating on
-        # n_claimed alone could pull hundreds of MB through collect() on a
-        # high-fan-out wave before n_new is known).  None until the first
-        # wave reports; the gate then uses a conservative default fan-out.
-        self._new_per_claim: float | None = None
         # politeness state lives driver-side between waves (budgets are
         # broadcast-bound, so they fit by construction); the budgets table
         # is still committed every wave for resume
@@ -140,10 +119,7 @@ class WaveEngine:
         INVARIANT: urls are unique.  Real Common-Crawl-style snapshots can
         carry duplicate captures of a url; dedup them at ingest (keep the
         latest warc_ts) — the per-wave fetch-miss detection counts hits
-        against claims and duplicate hits would mask misses.  Pass
-        ``verify_unique_urls=True`` to pay one url-column aggregate at run
-        start that asserts the invariant (cheap relative to a crawl: the
-        scan is column-pruned to urls only); the wave loop additionally
+        against claims and duplicate hits would mask misses.  The wave loop
         fails loudly on the first wave where n_hits > n_claimed.
         """
         return self.spark.read.parquet(
@@ -210,19 +186,6 @@ class WaveEngine:
     def last_wave(self) -> int:
         return self.frontier_t.meta().get("wave", 0)
 
-    def _ensure_bloom(self, frontier: DataFrame):
-        if not self.use_bloom:
-            return
-        if self._bloom is None:
-            if self.seen_filter == "cuckoo":
-                self._bloom = DD.build_cuckoo(
-                    frontier.select("url"),
-                    expected=self.expected_total_urls)
-            else:
-                self._bloom = DD.build_bloom(
-                    frontier.select("url"),
-                    expected=self.expected_total_urls, fpp=self.bloom_fpp)
-
     # -- one micro-batch -----------------------------------------------------
 
     def run_wave(self, wave: int, pages: DataFrame) -> dict:
@@ -244,13 +207,22 @@ class WaveEngine:
         frontier = self.frontier_t.read(spark).persist()
         budgets_pdf = self._budgets()
         t0 = _t("rs_plan", t0)   # manifest read + merge-on-read DAG build
-        self._ensure_bloom(frontier)
-        t0 = _t("read_state", t0)  # first-wave seen-filter build job
+        # seen side = the whole frontier url set, sized from the delta log's
+        # footer row counts (cheap, driver-side).  The Bloom only routes
+        # rows once the anti-join stops broadcasting (DD.filter_new_urls),
+        # so it is built on the first wave that reaches that gate — a
+        # resumed engine rebuilds it here the same way
+        seen_count = self.frontier_t.approx_rows()
+        broadcast_below = DD.SEEN_BROADCAST_BELOW
+        above_gate = seen_count is None or seen_count >= broadcast_below
+        if self._bloom is None and above_gate:
+            self._bloom = DD.build_bloom(frontier.select("url"),
+                                         expected=self.expected_total_urls)
+        t0 = _t("read_state", t0)  # the Bloom build job, on its first wave
 
         grants = spark.createDataFrame(PL.grants_pd(budgets_pdf),
                                        "host string, grant int")
-        claimed = FR.dequeue(frontier, grants,
-                             self.salt_buckets, self.max_attempts)
+        claimed = FR.dequeue(frontier, grants, self.salt_buckets)
         claimed = claimed.persist()
         t0 = _t("dq_plan", t0)   # driver-side dequeue DAG build
         # one job: materialize the claim cache AND produce the per-host
@@ -260,8 +232,7 @@ class WaveEngine:
                      .agg(F.count("*").alias("n"),
                           F.min("url").alias("lo"), F.max("url").alias("hi"))
                      .unionByName(
-                         frontier.filter(
-                             FR.eligibility_predicate(self.max_attempts))
+                         frontier.filter(FR.eligibility_predicate())
                          .agg(F.count("*").alias("n"))
                          .select(F.lit("\0pending").alias("host"), "n",
                                  F.lit(None).cast("string").alias("lo"),
@@ -366,10 +337,9 @@ class WaveEngine:
         t0 = _t("px_footer", t0)
 
         # miss detection relies on the pages table having UNIQUE urls (see
-        # pages() docstring; verify_unique_urls opts into a load-time check).
-        # With duplicate captures a duplicate hit could exactly offset a
-        # missed claim (n_hits == n_claimed with a miss), so the missed URL
-        # would silently stay eligible forever.  A dup that is NOT offset by
+        # pages() docstring).  With duplicate captures a duplicate hit could
+        # exactly offset a missed claim (n_hits == n_claimed with a miss), so
+        # the missed URL would silently stay eligible forever.  A dup that is NOT offset by
         # a miss shows up as n_hits > n_claimed — fail loudly there so a
         # violated invariant surfaces on the first non-masked wave instead
         # of livelocking.
@@ -377,8 +347,7 @@ class WaveEngine:
             raise RuntimeError(
                 f"wave {wave}: {n_hits} fetch hits for {n_claimed} claimed "
                 "urls — the pages table has duplicate captures per url; "
-                "dedup it at ingest (keep latest warc_ts) or pass "
-                "verify_unique_urls=True to catch this at startup")
+                "dedup it at ingest (keep latest warc_ts)")
         missing = None
         if n_hits == n_claimed:
             parsed = parsed_hits
@@ -427,13 +396,9 @@ class WaveEngine:
             PL.robots_allowed(PS.explode_links(parsed, wave_id=wave),
                               self.robots()))
         candidates = candidates.persist()
-        # seen side = the whole frontier url set; the head job counted the
-        # pending slice, so approximate the frontier size from the table's
-        # row-count metadata kept by the delta log (cheap, driver-side)
         new_urls = DD.filter_new_urls(candidates, frontier.select("url"),
-                                      self._bloom,
-                                      seen_count=self.frontier_t.approx_rows(),
-                                      broadcast_below=self.seen_broadcast_below
+                                      self._bloom, seen_count=seen_count,
+                                      broadcast_below=broadcast_below
                                       ).persist()
         t0 = _t("cd_plan", t0)   # driver-side candidates/new-urls DAG build
         # ONE control-collect job materializes both caches and yields the
@@ -441,20 +406,6 @@ class WaveEngine:
         # the blocked-host set — per-wave fixed job count is what bounds
         # scaling once the parse stage is fast (Amdahl), so every small
         # action is fused into this single generic-schema collect.
-        #
-        # When the wave is small enough the new-URL md5 digests ride back on
-        # the SAME job as per-partition concatenated hex — the Bloom update
-        # then needs no separate collect job at all.  The gate bounds the
-        # ESTIMATED digest volume (32 B/hex-digest x expected new URLs, where
-        # expected-new = claims x the previous wave's observed fan-out with a
-        # 1.5x safety factor; first wave assumes fan-out 50): ~1M expected
-        # new URLs = ~32 MB collected, matching the dedicated path's old
-        # gate.  At 10^8-claim scale this falls back to a count-only branch
-        # + the distributed Bloom build below.
-        est_fanout = (self._new_per_claim if self._new_per_claim is not None
-                      else 50.0)
-        fuse_md5 = (self._bloom is not None
-                    and n_claimed * est_fanout * 1.5 <= 1_000_000)
         # "c" column = rows that will still be claim-eligible AFTER this
         # wave's delta commits: for claims that's the post-update predicate
         # (status < in-flight, crawler_count+1 under the retry cap); for new
@@ -465,18 +416,9 @@ class WaveEngine:
         # pending == 0, pure per-run fixed cost.
         claim_still_eligible = (
             (F.col("status") < FR.STATUS_IN_FLIGHT)
-            & (F.col("crawler_count") + 1 < F.lit(self.max_attempts))
+            & (F.col("crawler_count") + 1 < F.lit(FR.MAX_ATTEMPTS))
             & F.col("host").isNotNull())
         new_branch = (
-            new_urls.select(F.md5("url").alias("h"),
-                            F.col("host").isNotNull().alias("ok"))
-            .groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("a"),
-                 F.sum(F.col("ok").cast("long")).alias("c"),
-                 F.concat_ws("", F.collect_list("h")).alias("s"))
-            .select(F.lit("new").alias("kind"), "pid", "a",
-                    F.lit(0).cast("long").alias("b"), "c", "s")
-            if fuse_md5 else
             new_urls.agg(
                 F.count("*").alias("a"),
                 F.sum(F.col("host").isNotNull().cast("long")).alias("c"))
@@ -505,13 +447,6 @@ class WaveEngine:
         n_new = sum(r.a for r in ctrl if r.kind == "new")
         n_still_eligible = sum(r.c or 0 for r in ctrl if r.kind == "parse")
         n_new_eligible = sum(r.c or 0 for r in ctrl if r.kind == "new")
-        # feed the observed fan-out back into the next wave's fuse gate
-        if n_claimed > 0:
-            self._new_per_claim = n_new / n_claimed
-        # add_many_hex concatenates its input anyway, so the per-partition
-        # blobs go in as-is — no per-digest splitting
-        new_md5_blobs = ([r.s for r in ctrl if r.kind == "new" and r.s]
-                         if fuse_md5 else None)
         blocked = set()
         for r in ctrl:
             if r.kind == "parse" and r.s:
@@ -576,28 +511,10 @@ class WaveEngine:
 
         t0 = _t("frontier_merge", t0)
         if self._bloom is not None and n_new > 0:
-            # incremental seen-set update: a wave's new URLs are bounded by
-            # the politeness budgets.  Small waves already brought their md5
-            # digests back on the fused control job (no extra Spark job at
-            # all — one vectorized numpy pass adds them); mid-sized waves
-            # collect digests in a dedicated job; huge waves fall back to
-            # the distributed treeAggregate build + merge, which costs a
-            # full sized-bloom per partition + merge shuffle and only wins
-            # when the collect itself would strain the driver
-            if new_md5_blobs is not None:
-                self._bloom.add_many_hex(new_md5_blobs)
-            elif n_new <= 1_000_000:
-                self._bloom.add_many_hex(
-                    [r[0] for r in
-                     new_urls.select(F.md5("url")).collect()])
-            elif self.seen_filter == "cuckoo":
-                self._bloom = self._bloom.merge(DD.build_cuckoo(
-                    new_urls.select("url"),
-                    expected=self.expected_total_urls))
-            else:
-                self._bloom = self._bloom.merge(DD.build_bloom(
-                    new_urls.select("url"),
-                    expected=self.expected_total_urls, fpp=self.bloom_fpp))
+            # incremental seen-set update: a Bloom of this wave's new URLs
+            # (bounded by the politeness budgets), same size, OR-merged in
+            self._bloom.merge(DD.build_bloom(
+                new_urls.select("url"), expected=self.expected_total_urls))
 
         t0 = _t("bloom_merge", t0)
         stats.update({"candidates": n_candidates, "new": n_new,
@@ -615,16 +532,6 @@ class WaveEngine:
             missing.unpersist()
         return stats
 
-    def warm_pages(self) -> None:
-        """Materialize the pages cache ahead of run() (bench methodology:
-        the one-time input-cache build is environment setup — it exists at
-        neither steady state nor Iceberg scale, where the scan prunes to
-        claimed buckets instead of being cached).  run() reuses the same
-        cache entry via plan canonicalization."""
-        if self.cache_pages:
-            p = self.pages().select("url", "html").persist()
-            p.count()
-
     def run(self, resume: bool = True) -> list[dict]:
         if not (resume and self.frontier_t.exists()):
             self._init_state()
@@ -632,16 +539,6 @@ class WaveEngine:
         self._rollback_appends(start)
         self._budgets_pdf = None  # reload politeness state post-rollback
         pages = self.pages().select("url", "html")
-        if self.verify_unique_urls:
-            from pyspark.sql import functions as F
-            dup = (self.pages().select("url").groupBy("url")
-                   .agg(F.count("*").alias("n")).filter("n > 1").limit(1)
-                   .collect())
-            if dup:
-                raise RuntimeError(
-                    f"pages table violates the unique-url invariant "
-                    f"(e.g. {dup[0].url!r} x{dup[0].n}); dedup at ingest "
-                    "(keep latest warc_ts) before crawling")
         # bytes-bounded Arrow batches for the parse stage (row cap derived
         # from the parquet footers' per-column byte stats — driver-side,
         # no Spark job; the sampling job remains the fallback for

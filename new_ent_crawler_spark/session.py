@@ -13,6 +13,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of the host's MemTotal, capped at 24g: the local[N] JVM heap
+    is the driver heap, and a fixed 24g heap on a smaller host lets the
+    kernel OOM-kill the JVM once the heap grows (SPARK_DRIVER_MEM
+    overrides)."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(line.split()[1]) for line in f
+                            if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{max(1, min(24 * 1024, total_kb // 2048))}m"
+
+
 def get_spark(app: str = "new-ent-crawler-spark", cpus: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
@@ -57,10 +71,8 @@ def get_spark(app: str = "new-ent-crawler-spark", cpus: int | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # conservative library default; the bench environment raises it via
-        # SPARK_DRIVER_MEM (a 56g default would fail JVM startup on smaller
-        # hosts)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )

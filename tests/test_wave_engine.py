@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from new_ent_crawler_spark.operators import assemble as ASM
+from new_ent_crawler_spark.operators import dedup as DD
 from new_ent_crawler_spark.oracle import sink as SK
 from new_ent_crawler_spark.plans.wave import WaveEngine
 from new_ent_crawler_spark.simulator import Simulator
@@ -24,6 +25,11 @@ def _simulator_for(web_dir, **kw):
     sim = Simulator(pages, seeds, robots, **kw)
     sim.run()
     return sim
+
+
+def _lineage_dedup_hits(eng):
+    return (eng.lineage_t.read(eng.spark).filter("stage = 'dedup'")
+            .agg(F.sum("dedup_hits")).collect()[0][0])
 
 
 @pytest.fixture(scope="module")
@@ -84,9 +90,7 @@ def test_lineage_counts(crawl):
     parse_in = lin.filter("stage = 'parse'").agg(
         F.sum("urls_in")).collect()[0][0]
     assert parse_in == len(sim.crawl_order())
-    dedup_hits = lin.filter("stage = 'dedup'").agg(
-        F.sum("dedup_hits")).collect()[0][0]
-    assert dedup_hits == sim.dedup_hits
+    assert _lineage_dedup_hits(eng) == sim.dedup_hits
 
 
 def test_fast_seeding_equals_spark_seeding(crawl, spark, tiny_web):
@@ -146,19 +150,45 @@ def test_resume_from_checkpoint(spark, tiny_web, tmp_path_factory):
     assert resumed.crawl_order() == full.crawl_order()
 
 
-def test_cuckoo_seen_filter_equivalence(crawl, spark, tiny_web,
-                                        tmp_path_factory):
-    """seen_filter="cuckoo" (the north_star's deletion-capable alternative
-    to the Bloom) must yield an identical crawl: same seen set, same crawl
-    order — the filter only ever prunes the exact anti-join."""
+def test_no_bloom_below_broadcast_gate(crawl):
+    """The tiny web's frontier never reaches the seen-set broadcast gate,
+    so the anti-join always broadcasts and no Bloom is ever built."""
     eng, _, _ = crawl
+    assert eng._bloom is None
+
+
+def test_bloom_routed_crawl_equals_simulator(spark, tiny_web,
+                                             tmp_path_factory, monkeypatch):
+    """With the broadcast gate forced to 0 every wave routes its
+    candidates through the Bloom (built on wave 1, merged with each wave's
+    new URLs).  The crawl must still equal the simulator — the Bloom only
+    routes rows to the exact anti-join — including a run stopped after
+    wave 2 and resumed, whose fresh engine rebuilds the Bloom lazily."""
+    monkeypatch.setattr(DD, "SEEN_BROADCAST_BELOW", 0)
     web_dir, _ = tiny_web
-    work = str(tmp_path_factory.mktemp("cuckoo_work"))
-    c = WaveEngine(spark, web_dir, work, per_host_k=8, max_waves=30,
-                   expected_total_urls=10_000, seen_filter="cuckoo")
-    c.run()
-    assert c.seen_urls() == eng.seen_urls()
-    assert c.crawl_order() == eng.crawl_order()
+    sim = _simulator_for(web_dir, per_host_k=8, max_waves=30)
+    w_full = str(tmp_path_factory.mktemp("bloom_full"))
+    w_part = str(tmp_path_factory.mktemp("bloom_part"))
+    full = WaveEngine(spark, web_dir, w_full, per_host_k=8, max_waves=30,
+                      expected_total_urls=10_000)
+    full.run()
+    WaveEngine(spark, web_dir, w_part, per_host_k=8, max_waves=2,
+               expected_total_urls=10_000).run()
+    resumed = WaveEngine(spark, web_dir, w_part, per_host_k=8, max_waves=30,
+                         expected_total_urls=10_000)
+    assert resumed._bloom is None
+    resumed.run(resume=True)
+
+    for eng in (full, resumed):
+        assert eng._bloom is not None
+        # no false negatives: every seen url went into the Bloom
+        assert all(eng._bloom.might_contain(u) for u in sim.seen_urls())
+        assert eng.seen_urls() == sim.seen_urls()
+        assert eng.crawl_order() == sim.crawl_order()
+        got = {r.url: r.status
+               for r in eng.frontier().select("url", "status").collect()}
+        assert got == sim.statuses()
+        assert _lineage_dedup_hits(eng) == sim.dedup_hits
 
 
 def test_delta_frontier_compaction_equivalence(spark, tiny_web,
